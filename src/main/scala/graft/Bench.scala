@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query at SPARK_GRAFT_SF_DIR,
   * prints ONE JSON line. Failures are reported per query in an `errors`
   * field (never silently folded into the total — VERDICT r1 item 10) and
@@ -11,16 +9,18 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = GraftSession.sfDir
+    // MEDIAN-OF-3 per query: the bench host is co-tenant contended (2-4×
+    // single-run variance observed across rounds; identical plans measured
+    // 1.7 s and 102 s) — one run measures the neighbors, the median of
+    // three measures the engine. Each rep is a full cold run (cache
+    // cleared between reps), so the median is a cold-query time, not a
+    // cache readback.
+    val reps = GraftSession.benchReps
+    // Optional comma-separated name filter for targeted re-measurement
+    // (regression triage without a 100-query run); absent = all queries.
+    val only = GraftSession.benchOnly
+    val spark = GraftSession.start()
 
     // JVM/codegen warmup + Hadoop/parquet reader init (otherwise the first
     // query is charged several seconds of one-time setup): exercise the
@@ -52,17 +52,6 @@ object Bench {
     // data touched instead of re-arbitrating co-tenant noise each round.
     val rowCounts = collection.mutable.LinkedHashMap.empty[String, Long]
     val errors = collection.mutable.LinkedHashMap.empty[String, String]
-    // MEDIAN-OF-3 per query: the bench host is co-tenant contended (2-4×
-    // single-run variance observed across rounds; identical plans measured
-    // 1.7 s and 102 s) — one run measures the neighbors, the median of
-    // three measures the engine. Each rep is a full cold run (cache
-    // cleared between reps), so the median is a cold-query time, not a
-    // cache readback.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    // Optional comma-separated name filter for targeted re-measurement
-    // (regression triage without a 100-query run); absent = all queries.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
     // Sorted order: stable attribution across rounds (Map iteration order
     // shifts as entries are added, moving the noise-prone early slots).
     SparkEntry.queries.toSeq.sortBy(_._1)

@@ -1,20 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     new java.io.File(outDir).mkdirs()
     // Recursive delete for FAILED queries: `mode("overwrite")` only
     // replaces the dump when the write SUCCEEDS — a query that throws
@@ -33,8 +24,7 @@ object Verify {
     // Iteration aid (mirrors Bench's SPARK_GRAFT_BENCH_ONLY): dump only a
     // comma-separated subset; the driver never sets it, so its runs are
     // always the full surface. oracle_sql.json is still written in full.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = GraftSession.verifyOnly
     val selected = only match {
       case Some(set) => SparkEntry.queries.filter { case (n, _) => set(n) }
       case None => SparkEntry.queries

@@ -89,7 +89,7 @@ object BpeOps {
     // plan, so each round's rewrite stacks one more mergePair fold onto
     // the lineage — planning cost grows linearly per round and the
     // accumulated tree OOMs the driver near merge ~600 (caught by the
-    // scale-bpe price ladder, round 13). Eager localCheckpoint cuts the
+    // round-13 BPE price ladder, PLANS.md). Eager localCheckpoint cuts the
     // plan to a constant-size LogicalRDD every round. Caveat (the
     // standard localCheckpoint contract): blocks are MEMORY_AND_DISK on
     // the executors with lineage gone, so an executor loss aborts the
@@ -444,11 +444,11 @@ object BpeOps {
   }
 
   /** [[bpeTrainAuto]]'s nMerges=16 output on the driver's sf0.01
-    * documents corpus (`Profile bpe-merges` provenance run, round 14) —
-    * frozen into the `bpe_train_segment` oracle so the gate re-proves
-    * every round that LIVE training reproduces this exact sequence and
-    * that segmentation applied to it matches the independent
-    * replace-chain formulation. A drift in either half (training
+    * documents corpus (regenerate with `bpeTrainAuto(documents, 16)` on
+    * the sf0.01 `Tables.documents`), frozen into the `bpe_train_segment`
+    * oracle so the gate re-proves every round that LIVE training
+    * reproduces this exact sequence and that segmentation applied to it
+    * matches the independent replace-chain formulation. A drift in either half (training
     * tie-break, histogram filter, merge fold) breaks the hash.
     *
     * DELIBERATE SF COUPLING: this oracle is valid ONLY against the

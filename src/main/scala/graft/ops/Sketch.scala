@@ -16,8 +16,8 @@ object Sketch {
     * — partition-bound, not row-bound — so file-split-width inputs
     * (hundreds of thousands of partitions at 100 TB) multiply the
     * exchange for zero extra information, while cores-width loses no
-    * parallelism. Measured in PLANS.md `scale-freq`: 3200 amplifier
-    * partitions shipped 257 MB of MG summaries; cores-width ships
+    * parallelism. Measured in PLANS.md (round-9 heavy hitters): 3200
+    * amplifier partitions shipped 257 MB of MG summaries; cores-width ships
     * 4.6 MB, and the sketch pass went from losing to the naive groupBy
     * on wall-clock to beating it 2.9×. Coalesce never RAISES the
     * partition count, so narrow inputs pass through unchanged, and

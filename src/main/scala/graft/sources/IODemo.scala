@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
 /** Usage demo for the file I/O surface: write the three self-describing /
@@ -9,10 +8,7 @@ import org.apache.spark.sql.types._
   */
 object IODemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start()
     import spark.implicits._
 
     val base = java.nio.file.Files.createTempDirectory("graft_io_demo").toString

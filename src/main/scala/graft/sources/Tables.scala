@@ -47,20 +47,24 @@ object Tables {
       loadSpecs.get(name))
   }
 
-  /** Relational-byte floor under which the load repartition is SKIPPED
-    * (round 16, VERDICT r15 item 3; guide §2.2/§6): a KB-scale
-    * dimension table (region/nation/supplier/part/customer locally)
-    * gains nothing from 32-way stages — the forced exchange just
-    * charges every consumer ~defaultParallelism near-empty tasks per
-    * stage, which at bench scale is pure scheduling overhead (181/227
-    * queries measured FASTER at 8 cores than 32 in round 15's scaling
-    * run). Parameterised for other deployments; at 100 TB the whole
-    * gate is moot — every table's scan already yields more splits than
+  /** Byte floor under which the load repartition is SKIPPED (round 16,
+    * VERDICT r15 item 3; guide §2.2/§6): a KB-scale dimension table
+    * (region/nation/supplier/part/customer locally) gains nothing from
+    * 32-way stages — the forced exchange just charges every consumer
+    * ~defaultParallelism near-empty tasks per stage, which at bench scale
+    * is pure scheduling overhead (181/227 queries measured FASTER at 8
+    * cores than 32 in round 15's scaling run). At 100 TB the whole gate
+    * is moot — every table's scan already yields more splits than
     * defaultParallelism, so [[parallelize]] is a no-op there with or
-    * without this floor. */
-  def parallelizeMinBytes: Long =
-    sys.env.get("SPARK_GRAFT_PARALLELIZE_MIN_BYTES").map(_.toLong)
-      .getOrElse(512L * 1024)
+    * without this floor.
+    *
+    * The floor is compared against PLANNER-ESTIMATED bytes
+    * (`queryExecution.analyzed.stats.sizeInBytes`), not the file length:
+    * for a parquet relation the estimate is the file length scaled by
+    * `spark.sql.sources.fileCompressionFactor` (1.0 by default), so a
+    * session that changes that factor moves the effective floor with it.
+    */
+  val ParallelizeMinBytes: Long = 512L * 1024
 
   /** The test tables are single small parquet files → single-partition
     * scans → every downstream hash/JSON/HOF stage runs on ONE core (a
@@ -68,7 +72,7 @@ object Tables {
     * Repartition to cluster parallelism, gated so it is a NO-OP at
     * real scale where the scan already yields >= defaultParallelism
     * splits — and (round 16) gated by INPUT BYTES, not partition count
-    * alone: see [[parallelizeMinBytes]]. Filters/pruning still push
+    * alone: see [[ParallelizeMinBytes]]. Filters/pruning still push
     * through Repartition.
     *
     * HASH on the spec'd key column, not round-robin (round 15): every
@@ -91,11 +95,10 @@ object Tables {
   def parallelize(df: DataFrame, spec: Option[LoadSpec]): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= target) return df
-    // planner-sized input bytes (what broadcast decisions use): for a
-    // bare parquet relation this is the file length — a driver-side
-    // metadata read, no scan
+    // planner-sized input bytes (what broadcast decisions use): a
+    // driver-side metadata read, no scan
     val bytes = df.queryExecution.analyzed.stats.sizeInBytes
-    if (!spec.exists(_.alwaysParallel) && bytes < parallelizeMinBytes) df
+    if (!spec.exists(_.alwaysParallel) && bytes < ParallelizeMinBytes) df
     else df.repartition(target, col(spec.map(_.key).getOrElse(df.columns.head)))
   }
 

@@ -177,16 +177,22 @@ class Round3AdditionsSpec extends SparkSpec {
       (3L, 0L, 0L), (3L, 1L, -1L), (3L, 2L, -1L)))
   }
 
+  /** Planner-estimated bytes of a raw table scan: what the loader's size
+    * gate compares against [[Tables.ParallelizeMinBytes]]. */
+  private def plannerBytes(dir: String, table: String): BigInt =
+    spark.read.parquet(s"$dir/$table.parquet")
+      .queryExecution.analyzed.stats.sizeInBytes
+
   test("Q6 predicates push into the parquet scan") {
+    // Precondition: sf0.001's lineitem is under the loader's size gate,
+    // so the load repartition is skipped and its hash-partition key
+    // does not ride the scan.
+    assert(plannerBytes("/root/testdata/sf0.001", "lineitem") <
+      Tables.ParallelizeMinBytes)
     val p = plan(RelationalOps.revenueChange(
       Tables.lineitem(spark, "/root/testdata/sf0.001")))
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate)"))
     // Column pruning: the scan reads EXACTLY the 4 referenced columns.
-    // (Round 16: sf0.001's lineitem is under the loader's size gate —
-    // Tables.parallelizeMinBytes — so the load repartition is skipped
-    // and the round-15 cost of the hash-partition key surviving
-    // pruning no longer applies at this scale; above the gate the key
-    // column still rides the scan by construction.)
     assert(p.contains("ReadSchema: struct<l_quantity:double," +
       "l_extendedprice:double,l_discount:double,l_shipdate:ti"))
   }
@@ -194,11 +200,17 @@ class Round3AdditionsSpec extends SparkSpec {
   test("loader size gate: KB-scale tables skip the repartition, tables " +
     "above the gate (and always-parallel text/vector tables) get it") {
     val target = spark.sparkContext.defaultParallelism
-    // region (1.9 KB) is under parallelizeMinBytes -> single scan split
+    // Preconditions, by planner size: region at sf0.001 is under the
+    // gate and lineitem at sf0.01 is at or above it.
+    assert(plannerBytes("/root/testdata/sf0.001", "region") <
+      Tables.ParallelizeMinBytes)
+    assert(plannerBytes("/root/testdata/sf0.01", "lineitem") >=
+      Tables.ParallelizeMinBytes)
+    // region is under the gate -> single scan split
     assert(Tables.region(spark, "/root/testdata/sf0.001")
       .rdd.getNumPartitions < target)
-    // lineitem at sf0.01 (~1 MB) is above the gate -> repartitioned on
-    // its spec'd key
+    // lineitem at sf0.01 is above the gate -> repartitioned on its
+    // spec'd key
     val li = Tables.lineitem(spark, "/root/testdata/sf0.01")
     assert(li.rdd.getNumPartitions == target)
     assert(li.queryExecution.executedPlan.toString
